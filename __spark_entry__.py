@@ -97,8 +97,8 @@ _REWRITTEN_OPS: dict[str, int] = {
     # plan_memo/peek_memo: memo entries carry a materialized flag so
     # an eager request that hits (or loses a race to) a lazily-built
     # entry materializes it then (r13 advice); _repin gains the
-    # cluster-hardening spark.tkes.memo.fullProbe count() probe (r13
-    # verdict item 7). Hit-path internals changed for every memoized
+    # cluster-hardening full-partition count() probe (r13 verdict
+    # item 7). Hit-path internals changed for every memoized
     # working set's consumers.
     "operators._cache.plan_memo": 14,
     "operators._cache.peek_memo": 14,

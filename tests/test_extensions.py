@@ -2077,17 +2077,53 @@ def test_memo_eager_hit_materializes_lazy_entry(spark):
         _cache._MEMO.clear()
 
 
-def test_repin_full_probe_conf_validates_every_partition(spark):
-    """spark.tkes.memo.fullProbe=true switches the memo liveness probe
-    from take(1) (one partition — exact only under local-mode all-block
-    eviction) to count() (every partition — the cluster-hardened probe,
-    r13 verdict item 7). The flagged path must serve hits and survive a
-    full external eviction by rebuilding."""
+def test_memo_lazy_hit_after_eviction_clears_materialized_flag(spark):
+    """A non-eager hit on an entry whose blocks were evicted externally
+    is re-pinned lazily by _repin, so the entry must stop claiming it is
+    materialized — otherwise a later eager hit would skip the
+    materialization the stampede fix relies on."""
     from twitter_kafka_etl_spark.operators import _cache
 
-    spark.conf.set("spark.tkes.memo.fullProbe", "true")
+    src = spark.range(100)
+    tag = ("__test_lazy_hit_after_eviction",)
+    with _cache._LOCK:
+        _cache._MEMO.clear()
     try:
-        src = spark.range(64)
+        built = _cache.plan_memo(
+            src, tag, lambda: src.selectExpr("id * 3 AS v"), eager=True
+        )
+        key = _cache._plan_key(src, tag)
+        assert _cache._MEMO[key][2] is True
+        spark.catalog.clearCache()  # external eviction: blocks dropped
+        hit = _cache.plan_memo(
+            src, tag, lambda: src.selectExpr("id * 3 AS v")
+        )
+        assert hit is built
+        assert _cache._MEMO[key][2] is False
+    finally:
+        with _cache._LOCK:
+            _cache._MEMO.clear()
+
+
+def test_repin_full_probe_conf_validates_every_partition(
+    spark, monkeypatch
+):
+    """The memo liveness probe is derived from the master: local mode
+    uses take(1) (one partition — exact under local-mode all-block
+    eviction), any other master uses count() (every partition — the
+    cluster-hardened probe, r13 verdict item 7). Under a non-local
+    master the count() path must serve hits and survive a full external
+    eviction by rebuilding. take() is booby-trapped, so a hit served
+    through the one-partition probe would be rejected as dead."""
+    from twitter_kafka_etl_spark.operators import _cache
+
+    def no_take(self, n):
+        raise AssertionError("take() probe under a non-local master")
+
+    src = spark.range(64)
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    monkeypatch.setattr(type(src), "take", no_take)
+    try:
         tag = ("__test_full_probe",)
         with _cache._LOCK:
             _cache._MEMO.clear()
@@ -2107,7 +2143,6 @@ def test_repin_full_probe_conf_validates_every_partition(spark):
         )
         assert again.count() == 64
     finally:
-        spark.conf.unset("spark.tkes.memo.fullProbe")
         with _cache._LOCK:
             _cache._MEMO.clear()
 

@@ -1,10 +1,13 @@
 """Side-state compaction invariants (streaming/side_state.py): content
-preservation, tiered write-amplification bounds, replay safety, the
-checksum gate, and intent-journal crash roll-forward — plus the qs12
-end-to-end equivalence with compaction forced live mid-stream."""
+preservation, tiered write-amplification bounds, replay safety and the
+checksum gate — plus the qs12/qs17 end-to-end equivalence with
+compaction forced live mid-stream. Each test drives the tables the way
+the ingest folds do: write the batch's own partition, then
+``register_batch`` it."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pytest
@@ -21,34 +24,62 @@ def _write_delta(spark, path: str, b: int, lo: int, n: int) -> None:
 
 def _content(spark, path: str) -> list[tuple]:
     return sorted(
-        (r.k, r.v) for r in spark.read.parquet(path).select("k", "v").collect()
+        (r.k, r.v)
+        for r in S.read_side(spark, path).select("k", "v").collect()
     )
 
 
 def test_compaction_preserves_content_and_bounds_dirs(spark, tmp_path):
     """Drive 40 batches with every=8: every row written once stays
     visible exactly once across all folds, the live dir count stays
-    <= every + snapshots, and snapshot generations are negative so the
-    folds' own-batch ``__b != batch_id`` exclusion can never hit one."""
+    <= every + snapshots, on-disk garbage does not accumulate (GC keeps
+    the root close to the live set), and snapshot generations are
+    negative so the folds' own-batch ``__b != batch_id`` exclusion can
+    never hit one."""
     path = str(tmp_path / "state")
     os.makedirs(path)
     folds = 0
     for b in range(40):
-        # compaction first, then the batch's own write — the fold-start
-        # call order the ingest callbacks use
+        # compaction first, then the batch's own write and publish —
+        # the call order the ingest callbacks use
         folds += S.maybe_compact(spark, path, b, every=8)
         _write_delta(spark, path, b, lo=b * 10, n=10)
+        S.register_batch(path, b)
     assert folds >= 3
     assert _content(spark, path) == sorted(
-        (i, __import__("hashlib").md5(str(i).encode()).hexdigest())
-        for i in range(400)
+        (i, hashlib.md5(str(i).encode()).hexdigest()) for i in range(400)
     )
-    parts = S._partitions(path)
-    snaps = [b for b in parts if b < 0]
-    deltas = [b for b in parts if b >= 0]
+    live = S.live_partitions(path)
+    assert live is not None
+    snaps = [b for b in live if b < 0]
+    deltas = [b for b in live if b >= 0]
     assert snaps and len(deltas) < 8 + len(snaps)
     # tiered bound: snapshot count grows logarithmically, not linearly
     assert len(snaps) <= 4
+    # the root holds live dirs plus at most the in-flight margin —
+    # folded sources are GC'd, not abandoned
+    assert len(S._partitions(path)) <= len(live) + 1
+    # row accounting covers the live partitions only
+    assert S.live_rows(path) == 400
+
+
+def test_table_without_manifest_waits_for_register_batch(spark, tmp_path):
+    """A table that has never been registered holds nothing committed:
+    maybe_compact leaves it alone, reads fall back to the listing, and
+    the first register_batch bootstraps the manifest from that
+    listing."""
+    path = str(tmp_path / "state")
+    os.makedirs(path)
+    for b in range(4):
+        _write_delta(spark, path, b, lo=b * 10, n=10)
+    before = _content(spark, path)
+    assert S.maybe_compact(spark, path, batch_id=4, every=2) is False
+    assert S.live_partitions(path) is None
+    assert sorted(S._partitions(path)) == [0, 1, 2, 3]
+    S.register_batch(path, 3)
+    assert sorted(S.live_partitions(path)) == [0, 1, 2, 3]
+    assert S.maybe_compact(spark, path, batch_id=4, every=2)
+    assert _content(spark, path) == before
 
 
 def test_compaction_never_folds_own_or_future_batch(spark, tmp_path):
@@ -59,11 +90,12 @@ def test_compaction_never_folds_own_or_future_batch(spark, tmp_path):
     os.makedirs(path)
     for b in range(6):
         _write_delta(spark, path, b, lo=b * 10, n=10)
+        S.register_batch(path, b)
     before = _content(spark, path)
     assert S.maybe_compact(spark, path, batch_id=4, every=2)
-    parts = S._partitions(path)
-    assert 4 in parts and 5 in parts  # own + future: intact
-    assert [b for b in parts if 0 <= b < 4] == []  # earlier: folded
+    for parts in (S.live_partitions(path), S._partitions(path)):
+        assert 4 in parts and 5 in parts  # own + future: intact
+        assert [b for b in parts if 0 <= b < 4] == []  # earlier: folded
     assert _content(spark, path) == before
 
 
@@ -78,6 +110,7 @@ def test_merge_variant_preserves_groupwise_sums(spark, tmp_path):
             [(d, c, 1) for d in range(2) for c in range(8)],
             "depth int, cell int, counts long",
         ).write.mode("overwrite").parquet(os.path.join(path, f"__b={b}"))
+        S.register_batch(path, b)
     merge = lambda df: df.groupBy("depth", "cell").agg(  # noqa: E731
         F.sum("counts").alias("counts")
     )
@@ -90,11 +123,11 @@ def test_merge_variant_preserves_groupwise_sums(spark, tmp_path):
     )
     got = {
         (r.depth, r.cell): r.counts
-        for r in merge(spark.read.parquet(path)).collect()
+        for r in merge(S.read_side(spark, path)).collect()
     }
     assert got == {(d, c): 4 for d in range(2) for c in range(8)}
     # merged snapshot is 16 rows, not 64
-    snap = [b for b in S._partitions(path) if b < 0]
+    snap = [b for b in S.live_partitions(path) if b < 0]
     assert len(snap) == 1
     assert spark.read.parquet(
         os.path.join(path, f"__b={snap[0]}")
@@ -106,6 +139,7 @@ def test_merge_without_invariant_is_refused(spark, tmp_path):
     os.makedirs(path)
     for b in range(3):
         _write_delta(spark, path, b, lo=0, n=5)
+        S.register_batch(path, b)
     with pytest.raises(ValueError, match="invariant"):
         S.maybe_compact(
             spark, path, batch_id=3, every=2, merge=lambda df: df
@@ -114,12 +148,15 @@ def test_merge_without_invariant_is_refused(spark, tmp_path):
 
 def test_checksum_gate_aborts_and_leaves_sources(spark, tmp_path):
     """A fold whose merge drops rows goes loudly red BEFORE any source
-    dir is touched — x55's compute-from-the-rewritten-files contract."""
+    dir is touched — x55's compute-from-the-rewritten-files contract.
+    Nothing is published and the rejected snapshot is removed."""
     path = str(tmp_path / "state")
     os.makedirs(path)
     for b in range(4):
         _write_delta(spark, path, b, lo=b * 10, n=10)
+        S.register_batch(path, b)
     before = _content(spark, path)
+    gen, _ = S._latest_manifest(path)
     bad_merge = lambda df: df.filter(F.col("k") % 2 == 0)  # noqa: E731
     identity_inv = S._default_invariant  # NOT preserved by bad_merge
     with pytest.raises(RuntimeError, match="content.*invariant"):
@@ -132,198 +169,9 @@ def test_checksum_gate_aborts_and_leaves_sources(spark, tmp_path):
             invariant=identity_inv,
         )
     assert _content(spark, path) == before
+    assert S._latest_manifest(path)[0] == gen
+    assert sorted(S.live_partitions(path)) == [0, 1, 2, 3]
     assert sorted(S._partitions(path)) == [0, 1, 2, 3]
-    assert not os.path.exists(S._tmp_of(path))
-
-
-def test_journal_roll_forward_after_simulated_crash(spark, tmp_path):
-    """Crash between journal write and swap completion: the next call
-    rolls the swap FORWARD — the snapshot becomes visible, the folded
-    dirs disappear, content is intact. (A crash BEFORE the journal only
-    leaves an orphan tmp, which is swept.)"""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(4):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
-    # manufacture the post-journal pre-swap state by hand: verified tmp
-    # + journal, sources still in place
-    union = spark.read.parquet(*[
-        os.path.join(path, f"__b={b}") for b in range(3)
-    ])
-    union.coalesce(1).write.parquet(S._tmp_of(path))
-    S._write_journal(
-        path, {"fold": [f"__b={b}" for b in range(3)], "dest": "__b=-1",
-               "rows": 30}
-    )
-    # any later fold-start call recovers first (here: no new fold runs,
-    # only 1 committed delta remains afterwards)
-    assert S.maybe_compact(spark, path, batch_id=4, every=8) is False
-    parts = S._partitions(path)
-    assert sorted(parts) == [-1, 3]
-    assert _content(spark, path) == before
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
-    # orphan-tmp variant: crash BEFORE the journal existed — the tmp is
-    # swept, nothing else moves
-    spark.range(3).write.mode("overwrite").parquet(
-        S._tmp_of(path)
-    )
-    assert S.maybe_compact(spark, path, batch_id=4, every=8) is False
-    assert not os.path.exists(S._tmp_of(path))
-
-
-def test_crash_at_every_swap_step_preserves_content(
-    spark, tmp_path, monkeypatch
-):
-    """Systematic crash injection: kill the swap at EVERY rename step
-    (one per folded dir — 4 here, with batch_id=4 — plus the tmp→dest
-    rename; the itertools.count loop discovers the total rather than
-    hardcoding it), then recover via the next fold-start call. Whatever
-    the crash point, the table's visible content after recovery equals
-    the pre-fold content — the module's 'no row present zero times or
-    twice' claim, exercised at every reachable interruption, not just
-    one."""
-    import itertools
-
-    real_rename = os.rename
-    for crash_at in itertools.count(1):
-        path = str(tmp_path / f"state_{crash_at}")
-        os.makedirs(path)
-        for b in range(4):
-            _write_delta(spark, path, b, lo=b * 10, n=10)
-        before = _content(spark, path)
-        calls = {"n": 0}
-
-        def bomb(src, dst, *, _ca=crash_at, _c=calls):
-            _c["n"] += 1
-            if _c["n"] == _ca:
-                raise RuntimeError("injected crash")
-            return real_rename(src, dst)
-
-        monkeypatch.setattr(S.os, "rename", bomb)
-        try:
-            S.maybe_compact(spark, path, batch_id=4, every=2)
-            crashed = False
-        except RuntimeError as e:
-            assert "injected crash" in str(e)
-            crashed = True
-        finally:
-            monkeypatch.setattr(S.os, "rename", real_rename)
-        # recovery = the next fold-start call (no new fold triggers:
-        # at most 1 un-folded delta remains after roll-forward)
-        S.maybe_compact(spark, path, batch_id=4, every=8)
-        assert _content(spark, path) == before, f"crash point {crash_at}"
-        assert not os.path.exists(os.path.join(path, S._JOURNAL))
-        assert not os.path.exists(S._tmp_of(path))
-        if not crashed:  # rename count exceeded the protocol's total
-            break
-
-
-def test_torn_snapshot_rolls_back_not_forward(spark, tmp_path):
-    """Power-loss emulation: the journal committed but the snapshot's
-    data pages are gone (journaled row count disagrees with the tmp
-    footers). Recovery must roll BACK — sources restored bit-identical,
-    no truncated snapshot installed — including when the crash had
-    already moved some sources into trash."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(4):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
-    # verified-looking tmp... with a journal claiming MORE rows than
-    # the files hold (= pages lost after the fsync the journal assumed)
-    union = spark.read.parquet(*[
-        os.path.join(path, f"__b={b}") for b in range(3)
-    ])
-    union.coalesce(1).write.parquet(S._tmp_of(path))
-    S._write_journal(
-        path, {"fold": [f"__b={b}" for b in range(3)], "dest": "__b=-1",
-               "rows": 9999}
-    )
-    # one source already in trash: recovery must restore it
-    os.makedirs(S._trash_of(path))
-    os.rename(
-        os.path.join(path, "__b=0"),
-        os.path.join(S._trash_of(path), "__b=0"),
-    )
-    assert S.maybe_compact(spark, path, batch_id=4, every=8) is False
-    assert sorted(S._partitions(path)) == [0, 1, 2, 3]
-    assert _content(spark, path) == before
-    assert not os.path.exists(S._tmp_of(path))
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
-    # torn JOURNAL variant: unparseable journal = pre-commit state
-    union2 = spark.range(5).selectExpr("id as k", "md5(string(id)) as v")
-    union2.coalesce(1).write.parquet(S._tmp_of(path))
-    with open(os.path.join(path, S._JOURNAL), "w") as fh:
-        fh.write('{"fold": ["__b=')  # torn mid-write
-    assert S.maybe_compact(spark, path, batch_id=4, every=8) is False
-    assert _content(spark, path) == before
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
-
-
-def test_torn_installed_dest_restored_from_trash(spark, tmp_path):
-    """Deeper power-loss case: the snapshot was already RENAMED into
-    place when its pages turn out torn (footer count disagrees with the
-    journal) and the trash still holds the sources' last copy. The
-    cleanup must not commit the torn snapshot — recovery replaces it
-    from trash."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(3):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
-    # simulate: all sources renamed to trash, dest installed but torn
-    # (journal claims 30 rows, dest holds 10), tmp gone
-    os.makedirs(S._trash_of(path))
-    for b in range(3):
-        os.rename(
-            os.path.join(path, f"__b={b}"),
-            os.path.join(S._trash_of(path), f"__b={b}"),
-        )
-    _write_delta(spark, path, -1, lo=0, n=10)  # torn dest: 10 rows
-    S._write_journal(
-        path, {"fold": [f"__b={b}" for b in range(3)], "dest": "__b=-1",
-               "rows": 30}
-    )
-    S._recover(path)
-    assert sorted(S._partitions(path)) == [0, 1, 2]
-    assert _content(spark, path) == before
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
-    assert not os.path.isdir(S._trash_of(path))
-
-
-def test_legacy_journal_without_rows_rolls_forward(spark, tmp_path):
-    """A parseable journal without the r12 'rows' field (the pre-r12
-    format) must roll FORWARD under its original semantics. Treating it
-    as torn would restore the trash next to an already-installed
-    snapshot and double every folded row."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(3):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
-    # old-protocol crash state: snapshot installed, sources in trash,
-    # legacy journal (no rows) still present
-    union = spark.read.parquet(*[
-        os.path.join(path, f"__b={b}") for b in range(3)
-    ])
-    union.coalesce(1).write.parquet(os.path.join(path, "__b=-1"))
-    os.makedirs(S._trash_of(path))
-    for b in range(3):
-        os.rename(
-            os.path.join(path, f"__b={b}"),
-            os.path.join(S._trash_of(path), f"__b={b}"),
-        )
-    import json as _json
-
-    with open(os.path.join(path, S._JOURNAL), "w") as fh:
-        _json.dump(
-            {"fold": [f"__b={b}" for b in range(3)], "dest": "__b=-1"}, fh
-        )
-    S._recover(path)
-    assert sorted(S._partitions(path)) == [-1]
-    assert _content(spark, path) == before  # each row exactly once
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
 
 
 def test_qs12_with_live_compaction_matches_oracle(
@@ -335,7 +183,7 @@ def test_qs12_with_live_compaction_matches_oracle(
     from twitter_kafka_etl_spark.plans import REGISTRY
     from twitter_kafka_etl_spark.plans.oracle import compare
 
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_COMPACT_EVERY", "2")
+    monkeypatch.setattr(S, "DEFAULT_EVERY", 2)
     out = REGISTRY["qs12_stream_incremental_dedup"].build(spark, sf_dir)
     ok, msg = compare(
         out, oracle_con, REGISTRY["qs12_stream_incremental_dedup"].oracle
@@ -352,7 +200,7 @@ def test_qs17_with_live_compaction_matches_oracle(
     from twitter_kafka_etl_spark.plans import REGISTRY
     from twitter_kafka_etl_spark.plans.oracle import compare
 
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_COMPACT_EVERY", "2")
+    monkeypatch.setattr(S, "DEFAULT_EVERY", 2)
     out = REGISTRY["qs17_stream_neardup_ingest"].build(spark, sf_dir)
     ok, msg = compare(
         out, oracle_con, REGISTRY["qs17_stream_neardup_ingest"].oracle

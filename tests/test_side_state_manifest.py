@@ -1,14 +1,13 @@
-"""Manifest (rename-free, object-store) side-state visibility
-(streaming/side_state.py manifest section): content preservation under
-folds, atomic-publish crash semantics at EVERY filesystem step, torn
-manifests, torn published snapshots, replay idempotence, the pure
-tiered-merge planning bounds (hypothesis, no Spark), and the qs12/qs17
-end-to-end oracle equivalence with the whole protocol live."""
+"""The side-state manifest visibility protocol (streaming/side_state.py):
+no directory renames, atomic-publish crash semantics at EVERY
+filesystem step, torn manifests, torn published snapshots, replay
+idempotence, and the pure tiered-merge planning bounds (hypothesis, no
+Spark). Content, replay-safety and oracle tests of the folds live in
+test_side_state.py."""
 
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 import pytest
@@ -37,40 +36,7 @@ def _expected(n_batches: int, per: int = 10) -> list[tuple]:
     )
 
 
-@pytest.fixture
-def manifest_env(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_MANIFEST", "1")
-
-
-def test_manifest_drive_preserves_content_and_bounds_dirs(
-    spark, tmp_path, manifest_env
-):
-    """40 batches, every=8: visible content is exactly every row
-    written, live dirs stay bounded, and on-disk garbage does not
-    accumulate (GC keeps the root close to the live set)."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    folds = 0
-    for b in range(40):
-        folds += S.maybe_compact(spark, path, b, every=8)
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-        S.register_batch(path, b)
-    assert folds >= 3
-    assert _visible(spark, path) == _expected(40)
-    live = S.live_partitions(path)
-    assert live is not None and len(live) <= 8 + 4
-    snaps = [b for b in live if b < 0]
-    assert snaps and len(snaps) <= 4
-    # the root holds live dirs plus at most the in-flight margin —
-    # folded sources are GC'd, not abandoned
-    assert len(S._partitions(path)) <= len(live) + 1
-    # row accounting is manifest-aware
-    assert S.live_rows(path) == 400
-
-
-def test_manifest_protocol_is_rename_free(
-    spark, tmp_path, manifest_env, monkeypatch
-):
+def test_manifest_protocol_is_rename_free(spark, tmp_path, monkeypatch):
     """The visibility protocol performs no os.rename: drive a full
     fold with rename booby-trapped. (Scope per the module docs: this
     is about the publish/GC protocol — Spark's own parquet committer
@@ -96,14 +62,14 @@ def test_manifest_protocol_is_rename_free(
 
 
 def test_reader_sees_pre_or_post_fold_at_every_crash_point(
-    spark, tmp_path, monkeypatch, manifest_env
+    spark, tmp_path, monkeypatch
 ):
     """Systematic crash injection over every destructive/commit fs op
     in the fold (manifest publishes via os.replace, GC/sweep via
     shutil.rmtree, retention pruning via os.remove). After EVERY crash
     point, WITHOUT recovery, a reader must see exactly the pre-fold or
-    the post-fold row set — the manifest mode's strengthened claim —
-    and after the next fold-start call (recovery) the same must hold
+    the post-fold row set — the protocol's any-instant claim — and
+    after the next fold-start call (recovery) the same must hold
     with the garbage swept."""
     import itertools
 
@@ -165,7 +131,7 @@ def test_reader_sees_pre_or_post_fold_at_every_crash_point(
 
 
 def test_torn_manifest_falls_back_to_previous_generation(
-    spark, tmp_path, manifest_env
+    spark, tmp_path
 ):
     path = str(tmp_path / "state")
     os.makedirs(path)
@@ -190,7 +156,7 @@ def test_torn_manifest_falls_back_to_previous_generation(
 
 
 def test_torn_published_snapshot_rolls_back_to_sources(
-    spark, tmp_path, manifest_env, monkeypatch
+    spark, tmp_path, monkeypatch
 ):
     """Power-loss emulation in the publish→GC window: the manifest
     committed (snapshot live, rows recorded) but the snapshot's pages
@@ -239,7 +205,7 @@ def test_torn_published_snapshot_rolls_back_to_sources(
     assert not os.path.exists(os.path.join(path, snap))
 
 
-def test_register_batch_is_replay_idempotent(spark, tmp_path, manifest_env):
+def test_register_batch_is_replay_idempotent(spark, tmp_path):
     path = str(tmp_path / "state")
     os.makedirs(path)
     _write_delta(spark, path, 0, lo=0, n=5)
@@ -254,7 +220,7 @@ def test_register_batch_is_replay_idempotent(spark, tmp_path, manifest_env):
 
 
 def test_unpublished_partition_is_invisible_until_replay_publishes(
-    spark, tmp_path, manifest_env
+    spark, tmp_path
 ):
     """Crash between the data write and the publish: the dir exists
     but readers don't see it; a replayed batch overwrites and
@@ -268,52 +234,6 @@ def test_unpublished_partition_is_invisible_until_replay_publishes(
     _write_delta(spark, path, 1, lo=10, n=10)  # replay
     S.register_batch(path, 1)
     assert _visible(spark, path) == _expected(2)
-
-
-def test_merge_variant_preserves_groupwise_sums_manifest(
-    spark, tmp_path, manifest_env
-):
-    """qs15's additive count-min shape under manifest visibility."""
-    path = str(tmp_path / "cells")
-    os.makedirs(path)
-    for b in range(4):
-        spark.createDataFrame(
-            [(d, c, 1) for d in range(2) for c in range(8)],
-            "depth int, cell int, counts long",
-        ).write.mode("overwrite").parquet(os.path.join(path, f"__b={b}"))
-        S.register_batch(path, b)
-    merge = lambda df: df.groupBy("depth", "cell").agg(  # noqa: E731
-        F.sum("counts").alias("counts")
-    )
-    inv = lambda df: df.agg(  # noqa: E731
-        F.sum("counts").cast("bigint").alias("s"),
-        F.countDistinct("depth", "cell").alias("d"),
-    )
-    assert S.maybe_compact(
-        spark, path, batch_id=4, every=2, merge=merge, invariant=inv
-    )
-    got = {
-        (r.depth, r.cell): r.counts
-        for r in merge(S.read_side(spark, path)).collect()
-    }
-    assert got == {(d, c): 4 for d in range(2) for c in range(8)}
-
-
-def test_legacy_table_bootstraps_into_manifest_mode(
-    spark, tmp_path, monkeypatch
-):
-    """A listing-visible table that accumulated deltas BEFORE the env
-    flag flipped: the first manifest-mode fold publishes its listing
-    as gen 1 and proceeds; reads stay correct throughout."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(4):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    assert not S.is_manifest_table(path)
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_MANIFEST", "1")
-    assert S.maybe_compact(spark, path, batch_id=4, every=2)
-    assert S.is_manifest_table(path)
-    assert _visible(spark, path) == _expected(4)
 
 
 def test_plan_fold_tiered_bounds_property():
@@ -375,39 +295,3 @@ def test_plan_fold_tiered_bounds_property():
         assert n_deltas <= every + 1
 
     run()
-
-
-def test_qs12_manifest_mode_matches_oracle(
-    spark, sf_dir, oracle_con, monkeypatch
-):
-    """End-to-end: qs12 with manifest visibility AND compaction forced
-    live mid-stream matches the oracle exactly — the protocol swap is
-    invisible to query semantics."""
-    from twitter_kafka_etl_spark.plans import REGISTRY
-    from twitter_kafka_etl_spark.plans.oracle import compare
-
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_MANIFEST", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_COMPACT_EVERY", "2")
-    out = REGISTRY["qs12_stream_incremental_dedup"].build(spark, sf_dir)
-    ok, msg = compare(
-        out, oracle_con, REGISTRY["qs12_stream_incremental_dedup"].oracle
-    )
-    assert ok, msg
-
-
-def test_qs17_manifest_mode_matches_oracle(
-    spark, sf_dir, oracle_con, monkeypatch
-):
-    """Same gate for the near-dup ingest: BOTH side tables under
-    manifest visibility, compacting mid-stream, 4-level recursion
-    oracle exact."""
-    from twitter_kafka_etl_spark.plans import REGISTRY
-    from twitter_kafka_etl_spark.plans.oracle import compare
-
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_MANIFEST", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_COMPACT_EVERY", "2")
-    out = REGISTRY["qs17_stream_neardup_ingest"].build(spark, sf_dir)
-    ok, msg = compare(
-        out, oracle_con, REGISTRY["qs17_stream_neardup_ingest"].oracle
-    )
-    assert ok, msg

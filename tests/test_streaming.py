@@ -87,10 +87,10 @@ def test_ingest_non_contiguous_id_schedule_matches_oracle(spark, sf_dir):
 
     # stable derived dir (not pytest tmp): _staged_input caches by path.
     # Cache keyed on the SOURCE corpus identity and written via
-    # tmp+atomic-replace (the _write_journal pattern): an exists()-only
-    # guard would serve a truncated file forever after an interrupted
-    # first write, and stale data after a regenerated source corpus
-    # (r12 review).
+    # tmp+atomic-replace (side_state's manifest-publish pattern): an
+    # exists()-only guard would serve a truncated file forever after an
+    # interrupted first write, and stale data after a regenerated source
+    # corpus (r12 review).
     gap_dir = os.path.join(
         tempfile.gettempdir(), f"tkes_gapids_{os.path.basename(sf_dir)}"
     )

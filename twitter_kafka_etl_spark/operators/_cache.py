@@ -94,37 +94,25 @@ def _repin(hit: DataFrame) -> DataFrame | None:
       of a persisted-or-replayable frame, a no-op job when healthy) and
       the caller rebuilds instead of serving a dead frame.
 
-    Probe depth: the default take(1) touches one partition, so a
-    PARTIALLY evicted checkpoint-backed frame (some blocks lost,
-    partition 0's survivor intact — possible on multi-executor
-    deployments under executor loss) passes and dies later in the
-    consumer's full scan. In this engine's local-mode deployments every
-    eviction path (clearCache, the bench hygiene unpersist) drops all
-    blocks atomically, so the single-partition probe is exact and the
-    cheap default. Cluster deployments set
-    ``spark.tkes.memo.fullProbe=true`` (session conf, read per probe)
-    to validate EVERY partition with a count() instead — one cheap job
-    over cached blocks when healthy, and the only probe that is exact
-    under partial eviction.
+    Probe depth, derived from the master: a take(1) touches one
+    partition, so a PARTIALLY evicted checkpoint-backed frame (some
+    blocks lost, partition 0's survivor intact — possible on
+    multi-executor deployments under executor loss) passes and dies
+    later in the consumer's full scan. In local mode (``local[...]``)
+    every eviction path (clearCache, the bench hygiene unpersist) drops
+    all blocks atomically, so the single-partition probe is exact and
+    cheap. Any other master validates EVERY partition with a count()
+    instead — one cheap job over cached blocks when healthy, and the
+    only probe that is exact under partial eviction.
     """
     lvl = hit.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
         hit.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        full = False
-        try:
-            full = (
-                hit.sparkSession.conf.get(
-                    "spark.tkes.memo.fullProbe", "false"
-                ).lower()
-                == "true"
-            )
-        except Exception:  # noqa: BLE001 — conf lookup is best-effort
-            pass
-        if full:
-            hit.count()
-        else:
+        if hit.sparkSession.sparkContext.master.startswith("local"):
             hit.take(1)
+        else:
+            hit.count()
     except Exception:
         try:
             hit.unpersist()
@@ -226,15 +214,19 @@ def plan_memo(
             was_pinned = lvl.useMemory or lvl.useDisk
             alive = _repin(entry[0])
             if alive is not None:
+                materialized = entry[2] and was_pinned
                 # an eager request must not inherit a lazy entry's
                 # stampede window: materialize the hit NOW and record
                 # it, so the fix applies regardless of which consumer
-                # populated the slot first (r13 advice)
-                if eager and not (entry[2] and was_pinned):
+                # populated the slot first (r13 advice). A lazy hit on
+                # an evicted entry records that it was re-pinned lazily.
+                if eager and not materialized:
                     _materialize(alive)
+                    materialized = True
+                if materialized != entry[2]:
                     with _LOCK:
                         if _MEMO.get(key) is entry:
-                            _MEMO[key] = (entry[0], entry[1], True)
+                            _MEMO[key] = (entry[0], entry[1], materialized)
                 return alive
             with _LOCK:
                 if _MEMO.get(key) is entry:

@@ -1,4 +1,5 @@
-"""Compaction of the streaming ingest folds' ``__b=`` side-state tables.
+"""Visibility and compaction of the streaming ingest folds' ``__b=``
+side-state tables.
 
 The incremental ingest queries (qs12/qs14/qs15/qs17) accumulate their
 cross-batch state — fingerprint indexes, shingle indexes, band indexes,
@@ -13,11 +14,52 @@ partition dirs, +9–10 ms/batch at 100 dirs (SURVEY.md §6). Harmless in
 every measured regime, linear-in-history in principle: at a crawl's
 10k-th micro-batch the listing alone would cost ~1 s/batch.
 
-``maybe_compact`` is the production fix: every ``every`` batches the
-fold rolls its committed delta partitions into a SNAPSHOT partition
-(``__b=-g`` — negative, so it can never collide with a real batch id
-and never matches the folds' own-batch ``__b != batch_id`` exclusion),
-bounding the live dir count. Three properties carry the design:
+Visibility is a MANIFEST protocol, not a directory listing: an
+immutable, generation-numbered manifest object names the live partition
+dirs, and readers plan from the newest complete manifest. This is the
+metadata-log commit of Structured Streaming's own file sink (and of
+Iceberg/Delta). Object creation (a single PUT on S3; tmp + fsync +
+atomic replace on a local filesystem) is atomic, so each manifest
+publish IS the commit point, and no directory is ever renamed:
+
+- ``register_batch`` publishes gen+1 = live ∪ {__b=<batch_id>} after
+  each per-batch partition overwrite (set-idempotent: a replayed batch
+  whose dir is already live publishes nothing). A crash between the
+  data write and the publish leaves an invisible dir that the replay
+  overwrites and then publishes — exactly-once table contents under
+  at-least-once batch delivery. A table's first publish bootstraps from
+  its listing.
+- ``maybe_compact`` writes the snapshot DIRECTLY under its final
+  ``__b=-g`` name (unreferenced ⇒ invisible; no staging dir needed),
+  checksum-gates it from the written files, fsyncs, then publishes
+  gen+1 = (live − folded) ∪ {snapshot} with the fold recorded in the
+  manifest (``snapshot``/``rows``/``folded``). Source deletion is pure
+  GC after the commit: a crash anywhere leaves either the old manifest
+  (sources live, snapshot swept as garbage) or the new one (snapshot
+  live, leftover sources swept as garbage). A reader at ANY instant —
+  not just after recovery — sees exactly the pre- or post-fold row set.
+- Recovery reads only the manifest: the latest manifest's ``rows`` field
+  re-verifies the published snapshot from its parquet footers while the
+  folded sources still exist (the publish→GC window — the defense
+  against a snapshot torn by power loss despite its fsync); a torn
+  snapshot publishes a rollback manifest naming the still-present
+  sources. Unreferenced dirs are swept: any negative ``__b`` (abandoned
+  snapshot) and any delta with ``__b`` < ``batch_id`` (GC leftovers — a
+  committed batch is always published, so an unreferenced earlier delta
+  can only be a folded source); ``__b`` >= ``batch_id`` is an in-flight
+  batch awaiting its publish and is never touched.
+
+A table with no committed manifest yet (never registered, or a crash
+between the ``_manifests/`` mkdir and the first publish) reads through
+its listing, and ``maybe_compact`` leaves it alone until the next
+``register_batch`` bootstraps it.
+
+``maybe_compact`` is the fix for the growing listing cost: every
+``DEFAULT_EVERY`` batches the fold rolls its committed delta partitions
+into a SNAPSHOT partition (``__b=-g`` — negative, so it can never
+collide with a real batch id and never matches the folds' own-batch
+``__b != batch_id`` exclusion), bounding the live dir count. Two
+properties carry the fold:
 
 - **Size-tiered merging, not rewrite-everything.** Folding all history
   into one snapshot every N batches rewrites O(history) bytes each time
@@ -35,37 +77,23 @@ bounding the live dir count. Three properties carry the design:
   that drops, duplicates or mangles one row aborts loudly BEFORE any
   source dir is touched; an additive merge (qs15's count-min cells)
   passes its own merge-preserved invariant instead.
-- **Intent-journal crash protocol, power-loss safe.** POSIX gives no
-  atomic "delete N dirs + rename 1"; Structured Streaming's own file
-  sink solves the same problem with a metadata log. Order here:
-  (1) write the snapshot to a SIBLING tmp dir (outside the table root,
-  so it is invisible to readers and safe to read back for the gate),
-  (2) verify the checksum, (3) fsync the snapshot tree — data pages
-  durable BEFORE anything commits to installing them, (4) durably
-  write a journal (tmp + fsync + atomic replace + dir fsync) naming
-  the folded dirs, the destination, and the EXPECTED snapshot row
-  count, (5) rename folded dirs into a sibling trash dir, (6) rename
-  tmp → ``__b=-g``, (7) delete trash + journal. The journal is the
-  commit point: a crash before it leaves only an orphan tmp (swept);
-  a crash after it rolls FORWARD — but recovery first RE-VERIFIES the
-  tmp snapshot against the journaled row count from its parquet
-  footers, so even a snapshot torn by power loss (fsync bugs, disk
-  cache lies) rolls the swap BACK with sources restored rather than
-  installing truncated data. Every post-journal step is idempotent.
-  At every crash-recovery fixpoint the visible listing holds each
-  row exactly once — never zero times, never twice. (MID-swap, a
-  concurrent reader could transiently miss fold dirs already moved
-  to trash; the foreachBatch harness serializes reads against folds,
-  so that window is never observed. The manifest mode below is the
-  variant with the stronger any-instant guarantee, and its tests
-  assert it at every injected crash point WITHOUT recovery.) On
-  object stores without atomic rename (S3), the journal
-  generalizes to the manifest the reads consult — same policy,
-  different visibility primitive: IMPLEMENTED as manifest mode
-  (``$SPARK_GRAFT_SIDE_MANIFEST=1`` / ``_manifests/`` tables — see
-  the manifest section at the bottom of this module), which replaces
-  every rename with an atomic manifest-object publish and is the
-  protocol a real S3 deployment would run.
+
+Torn-manifest defense (local filesystems; S3 PUTs are all-or-nothing):
+every manifest embeds a sha256 of its canonical payload; readers walk
+generations downward to the newest manifest that parses and checks.
+Old manifests are retained ``_MANIFEST_KEEP`` deep — which is also the
+concurrent-reader grace window: a long-running read planned from gen G
+stays valid until G falls out of the window AND its dirs are
+folded+GC'd. This harness serializes reads with folds (foreachBatch); a
+production deployment sizes the window to its longest query, exactly
+like Iceberg's expire-snapshots grace.
+
+Scope note: "rename-free" is a claim about the VISIBILITY protocol
+(this module performs no os.rename — asserted in tests). Spark's local
+parquet committer still renames task files inside a single partition
+write; on a real object store that job is the platform committer's (S3A
+magic committer et al.), orthogonal to how committed partitions become
+visible.
 
 Replay safety: only partitions with ``0 <= __b < batch_id`` are ever
 folded — strictly earlier batches, which foreachBatch has already
@@ -102,46 +130,23 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: delta-dir count that triggers a fold (env-overridable; the 4-batch
-#: oracle harness never reaches it, the 100-batch probe does ~6 times)
+#: delta-dir count that triggers a fold (the 4-batch oracle harness
+#: never reaches it, the 100-batch probe does ~6 times; tests lower it
+#: by monkeypatching this module attribute)
 DEFAULT_EVERY = 16
 #: an existing snapshot joins the merge only while its rows are <= this
 #: multiple of the rows already folding (tiered-merge rule)
 RATIO = 2.0
 #: x55's checksum modulus — summable without overflow (n rows × <1e9)
 _CK_MOD = 1_000_000_007
-
-_JOURNAL = ".compact_journal"
-
-
-def _tmp_of(path: str) -> str:
-    """Snapshot staging dir — a SIBLING of the table root, not a
-    dot-dir inside it: Spark reads an explicitly-given dot-path
-    correctly but logs 'All paths were ignored' while doing so (the
-    hidden-file filter applies to the root too), and the checksum gate
-    must read the staged files back. Same parent dir → os.rename into
-    the table root stays an atomic same-filesystem move."""
-    return os.path.normpath(path) + ".compact_tmp"
+_MANIFEST_DIR = "_manifests"
+#: manifests retained (and thus the concurrent-reader grace depth)
+_MANIFEST_KEEP = 8
 
 
-def _trash_of(path: str) -> str:
-    return os.path.normpath(path) + ".compact_trash"
-
-
-def _every() -> int:
-    n = int(os.environ.get("SPARK_GRAFT_SIDE_COMPACT_EVERY", DEFAULT_EVERY))
-    if n < 2:
-        raise ValueError(f"SPARK_GRAFT_SIDE_COMPACT_EVERY={n}: need >= 2")
-    return n
-
-
-def _partitions(path: str) -> dict[int, str]:
-    """``__b`` value -> dir name, visible partitions only."""
+def _by_batch(names: list[str]) -> dict[int, str]:
+    """``__b`` value -> dir name for the ``__b=`` entries of ``names``."""
     out: dict[int, str] = {}
-    try:
-        names = os.listdir(path)
-    except OSError:
-        return out
     for d in names:
         if d.startswith("__b="):
             try:
@@ -149,6 +154,15 @@ def _partitions(path: str) -> dict[int, str]:
             except ValueError:
                 continue
     return out
+
+
+def _partitions(path: str) -> dict[int, str]:
+    """``__b`` value -> dir name, every partition dir on disk (live or
+    not)."""
+    try:
+        return _by_batch(os.listdir(path))
+    except OSError:
+        return {}
 
 
 def _dir_stats(path: str) -> tuple[int, int]:
@@ -188,11 +202,11 @@ def _default_invariant(df: DataFrame) -> DataFrame:
 
 def _fsync_tree(path: str) -> None:
     """fsync every file under ``path`` plus the dirs themselves, so the
-    snapshot's data pages are durable BEFORE the journal that commits
-    to installing it — without this, a power loss (not just a process
-    crash) could persist the tiny journal but lose the just-written
-    parquet pages to delayed allocation, and roll-forward would install
-    a truncated snapshot (r12 review finding)."""
+    snapshot's data pages are durable BEFORE the manifest that publishes
+    it — without this, a power loss (not just a process crash) could
+    persist the tiny manifest but lose the just-written parquet pages to
+    delayed allocation, and readers would be served a truncated snapshot
+    (r12 review finding)."""
     for root_, dirs, files in os.walk(path, topdown=False):
         for name in files:
             fd = os.open(os.path.join(root_, name), os.O_RDONLY)
@@ -208,139 +222,13 @@ def _fsync_tree(path: str) -> None:
 
 
 def _fsync_dir(path: str) -> None:
-    """fsync one directory's metadata (its entry list). The swap's
-    correctness argument assumes renames become durable in program
-    order; a filesystem that reorders metadata ops breaks that unless
-    each destructive step is fenced behind an explicit dir fsync."""
+    """fsync one directory's metadata (its entry list), so a manifest's
+    atomic create is durable before anything depends on it."""
     fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
     finally:
         os.close(fd)
-
-
-def _write_journal(path: str, journal: dict) -> None:
-    """Durable journal write: tmp file + fsync + atomic replace + dir
-    fsync. A torn journal is therefore impossible on a POSIX fs; a
-    crash before the replace leaves no journal (pre-swap state)."""
-    jpath = os.path.join(path, _JOURNAL)
-    with open(jpath + ".tmp", "w", encoding="utf-8") as fh:
-        json.dump(journal, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(jpath + ".tmp", jpath)
-    _fsync_dir(path)
-
-
-def _rollback(path: str) -> None:
-    """Undo a partially-applied swap: restore anything already moved to
-    trash, then drop the tmp snapshot and the journal. Leaves the table
-    exactly as it was before the fold started."""
-    trash = _trash_of(path)
-    if os.path.isdir(trash):
-        for d in os.listdir(trash):
-            target = os.path.join(path, d)
-            if not os.path.exists(target):
-                os.rename(os.path.join(trash, d), target)
-        shutil.rmtree(trash, ignore_errors=True)
-        # restored sources durable BEFORE the journal disappears — a
-        # power loss that persisted the journal removal but not the
-        # restore renames would otherwise leave the table with neither
-        # sources nor a journal to retry from (r12 advice)
-        _fsync_dir(path)
-    shutil.rmtree(_tmp_of(path), ignore_errors=True)
-    jpath = os.path.join(path, _JOURNAL)
-    if os.path.exists(jpath):
-        os.remove(jpath)
-
-
-def _recover(path: str) -> None:
-    """Finish an interrupted swap. The journal names the folded dirs,
-    the destination, and the EXPECTED SNAPSHOT ROW COUNT; before any
-    destructive step the tmp snapshot (when still present) is
-    re-verified against that count from its parquet footers — a
-    snapshot torn by power loss rolls the swap BACK (sources restored
-    untouched, fold retried from scratch at the next trigger) instead
-    of being installed — and the same count gates the INSTALLED
-    snapshot while the trash still holds the sources' last copy, so a
-    dest torn after its rename is replaced from trash rather than made
-    permanent by the cleanup. A journal that fails to PARSE means the
-    durable-replace in _write_journal never completed, i.e. no
-    destructive step ran: roll back (trash cannot exist yet). A
-    parseable journal without a ``rows`` field (the pre-r12 format) is
-    rolled forward under its original semantics — verification is
-    simply skipped; treating it as torn would restore trash next to an
-    already-installed snapshot and double every folded row. Orphan tmp
-    without a journal = crash before the commit point: swept."""
-    jpath = os.path.join(path, _JOURNAL)
-    if os.path.exists(jpath):
-        try:
-            with open(jpath, encoding="utf-8") as fh:
-                j = json.load(fh)
-            fold, dest_name = j["fold"], j["dest"]
-            rows = int(j["rows"]) if "rows" in j else None
-        except (ValueError, KeyError):
-            _rollback(path)
-            return
-
-        def _verified(d: str) -> bool:
-            if rows is None:
-                return True
-            try:
-                return _dir_stats(d)[0] == rows
-            except Exception:  # unreadable footer = torn write
-                return False
-
-        tmp = _tmp_of(path)
-        dest = os.path.join(path, dest_name)
-        if not os.path.exists(tmp) and not os.path.exists(dest):
-            # unreachable by any crash schedule (tmp is only removed
-            # after the rename or by rollback, which also removes the
-            # journal) — but if it ever occurs, rolling forward would
-            # delete sources with no snapshot; restore instead
-            _rollback(path)
-            return
-        if os.path.exists(tmp) and not os.path.exists(dest):
-            if not _verified(tmp):
-                _rollback(path)
-                return
-        # commit point passed and the staged snapshot verified: roll
-        # forward. The INSTALLED snapshot is re-verified below, after
-        # the rename and before any trash deletion.
-        trash = _trash_of(path)
-        os.makedirs(trash, exist_ok=True)
-        for d in fold:
-            src = os.path.join(path, d)
-            if os.path.exists(src):
-                os.rename(src, os.path.join(trash, d))
-        if os.path.exists(tmp) and not os.path.exists(dest):
-            os.rename(tmp, dest)
-        # durability fence between install and destruction (r12
-        # advice): make the dest + fold renames durable, then re-verify
-        # the INSTALLED snapshot while the trash still holds the
-        # sources' last complete copy — only then may that copy be
-        # destroyed. Without the fsync, a metadata-reordering power
-        # loss could persist the trash deletion while losing the dest
-        # rename (neither snapshot nor sources); without the
-        # verify-before-delete, a dest torn after its rename (the
-        # fsync-distrust threat model) would see its only replacement
-        # material destroyed mid-rmtree and be silently committed.
-        _fsync_dir(path)
-        if not _verified(dest):
-            shutil.rmtree(dest, ignore_errors=True)
-            _rollback(path)
-            return
-        shutil.rmtree(trash, ignore_errors=True)
-        # trash removal durable before the journal vanishes: a
-        # resurrected trash dir next to a removed journal would look
-        # like rollback material to no one (nothing reads it without a
-        # journal) but would shadow-restore on the NEXT fold's
-        # _rollback; fence it away
-        _fsync_dir(path)
-        os.remove(jpath)
-    tmp = _tmp_of(path)
-    if os.path.exists(tmp):  # crashed before the journal: orphan
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _plan_fold(
@@ -350,10 +238,9 @@ def _plan_fold(
     every: int,
     ratio: float | None = None,
 ) -> tuple[list[str], str] | None:
-    """Pure fold planning, shared by both visibility modes (and
-    property-tested without Spark): given the visible partitions and
-    their row counts, return (dirs to fold, snapshot dest name), or
-    None while the trigger hasn't fired.
+    """Pure fold planning (property-tested without Spark): given the
+    live partitions and their row counts, return (dirs to fold, snapshot
+    dest name), or None while the trigger hasn't fired.
 
     Policy: all committed deltas (0 <= __b < batch_id) fold; an
     existing snapshot joins the merge only while its rows are <=
@@ -374,177 +261,6 @@ def _plan_fold(
             total_rows += rows[d]
     gen = 1 + max((-b for b in parts if b < 0), default=0)
     return fold, f"__b=-{gen}"
-
-
-def maybe_compact(
-    spark: SparkSession,
-    path: str,
-    batch_id: int,
-    every: int | None = None,
-    merge: Callable[[DataFrame], DataFrame] | None = None,
-    invariant: Callable[[DataFrame], DataFrame] | None = None,
-    target_file_mb: int = 128,
-) -> bool:
-    """Fold committed ``__b=`` delta partitions of ``path`` into a
-    snapshot partition when ``every`` or more have accumulated; no-op
-    (one listdir) otherwise. Returns True when a fold ran.
-
-    ``merge``: optional whole-frame reduction applied to the unioned
-    runs (e.g. qs15's cell-wise count-min sum). Must be idempotent over
-    already-merged data. ``invariant``: 1-row aggregate preserved by
-    ``merge`` (REQUIRED when merge is given — the default row-identity
-    checksum is only valid for pure rewrites); computed over the input
-    union and over the written snapshot files, compared exactly.
-    """
-    if merge is not None and invariant is None:
-        # validated BEFORE the trigger early-return: a mis-wired call
-        # site must fail on its first batch in every harness, not at
-        # batch >= every mid-production (r12 review finding)
-        raise ValueError(
-            "maybe_compact: a custom merge changes row identity — pass "
-            "the merge-preserved invariant explicitly"
-        )
-    if not os.path.isdir(path):
-        return False
-    if is_manifest_table(path) or manifest_mode():
-        # object-store visibility: manifest publish instead of the
-        # journal+rename swap (see the manifest section below)
-        return _compact_manifest(
-            spark, path, batch_id, every, merge, invariant, target_file_mb
-        )
-    _recover(path)
-    parts = _partitions(path)
-    ev = every if every is not None else _every()
-    # cheap trigger check FIRST: the no-op path (every batch but the
-    # folding ones) must stay one listdir, not a footer walk
-    if sum(1 for b in parts if 0 <= b < batch_id) < ev:
-        return False
-    stats = {d: _dir_stats(os.path.join(path, d)) for d in parts.values()}
-    planned = _plan_fold(
-        parts, {d: s[0] for d, s in stats.items()}, batch_id, ev
-    )
-    if planned is None:
-        return False
-    fold, dest = planned
-    inv = invariant or _default_invariant
-
-    src_paths = [os.path.join(path, d) for d in fold]
-    union = spark.read.parquet(*src_paths)
-    out = merge(union) if merge is not None else union
-    n_files = max(
-        1,
-        math.ceil(
-            sum(stats[d][1] for d in fold) / (target_file_mb * 1024 * 1024)
-        ),
-    )
-    tmp = _tmp_of(path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    out.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-
-    # checksum gate BEFORE any source dir is touched, from the written
-    # files (x55: a fold that drops/duplicates/mangles one row must go
-    # red here, leaving the deltas exactly as they were). The expected
-    # side is computed over the RAW input union — a merge-preserved
-    # invariant must survive the merge, so this also catches a merge
-    # that loses counts, not just a bad write.
-    expect = inv(union).collect()[0]
-    got = inv(spark.read.parquet(tmp)).collect()[0]
-    if tuple(expect) != tuple(got):
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"side-state compaction of {path} failed its content "
-            f"invariant (expected {tuple(expect)}, snapshot has "
-            f"{tuple(got)}); sources left untouched"
-        )
-
-    # durability fence, then the intent journal (the commit point),
-    # then the idempotent swap (see module docstring): the snapshot's
-    # pages must be on disk before the journal that commits to
-    # installing it, and the journal carries the expected row count so
-    # recovery re-verifies the snapshot before any destructive step
-    snap_rows = _dir_stats(tmp)[0]
-    _fsync_tree(tmp)
-    _write_journal(path, {"fold": fold, "dest": dest, "rows": snap_rows})
-    _recover(path)
-    return True
-
-
-# ---------------------------------------------------------------------------
-# Manifest visibility mode — the object-store (rename-free) variant
-# ---------------------------------------------------------------------------
-# The journal+rename protocol above assumes atomic same-filesystem
-# ``os.rename`` — true on POSIX, false on S3-class object stores, where
-# "rename" is copy+delete and a directory listing is eventually
-# consistent. The production-standard fix (Iceberg/Delta/Structured
-# Streaming's own file sink) is to stop deriving visibility from the
-# listing entirely: an immutable, generation-numbered MANIFEST object
-# names the live partition dirs, and readers plan from the newest
-# complete manifest instead of listdir. Object creation (a single PUT)
-# is atomic, so the manifest publish IS the commit point — no journal,
-# no trash, no rename, no rollback machinery:
-#
-# - ``register_batch`` publishes gen+1 = live ∪ {__b=<batch_id>} after
-#   each per-batch partition overwrite (set-idempotent: a replayed
-#   batch whose dir is already live publishes nothing). A crash between
-#   the data write and the publish leaves an invisible dir that the
-#   replay overwrites and then publishes — the same exactly-once table
-#   contents the rename mode gets from own-partition overwrites.
-# - ``maybe_compact`` writes the snapshot DIRECTLY under its final
-#   ``__b=-g`` name (unreferenced ⇒ invisible; no staging dir needed),
-#   checksum-gates it from the written files, fsyncs, then publishes
-#   gen+1 = (live − folded) ∪ {snapshot} with the fold recorded in the
-#   manifest (``snapshot``/``rows``/``folded``). Source deletion is
-#   pure GC after the commit: a crash anywhere leaves either the old
-#   manifest (sources live, snapshot swept as garbage) or the new one
-#   (snapshot live, leftover sources swept as garbage). A reader at ANY
-#   instant — not just after recovery — sees exactly the pre- or
-#   post-fold row set, a strictly stronger property than the rename
-#   protocol's (whose mid-swap listing transiently hides rows; the
-#   batch harness serializes around it).
-# - Recovery needs no journal: the latest manifest's ``rows`` field
-#   re-verifies the published snapshot from its parquet footers while
-#   the folded sources still exist (the publish→GC window — the same
-#   fsync-distrust defense the journal's ``rows`` gives the rename
-#   mode); a torn snapshot publishes a rollback manifest naming the
-#   still-present sources. Unreferenced dirs are swept: any negative
-#   ``__b`` (abandoned snapshot) and any delta with ``__b`` <
-#   ``batch_id`` (GC leftovers — a committed batch is always published,
-#   so an unreferenced earlier delta can only be a folded source);
-#   ``__b`` >= ``batch_id`` is an in-flight batch awaiting its publish
-#   and is never touched.
-#
-# Mode selection: ``$SPARK_GRAFT_SIDE_MANIFEST=1`` turns the protocol
-# on for NEW tables; a table that already has a ``_manifests/`` dir is
-# manifest-managed forever after (self-describing — reads and replays
-# never depend on the env being set). ``read_side``/``live_rows``
-# dispatch on the table, so call sites are mode-agnostic. A legacy
-# listing-visible table entering compaction under the env flag is
-# bootstrapped by publishing its current listing as gen 1.
-#
-# Torn-manifest defense (local filesystems; S3 PUTs are all-or-
-# nothing): every manifest embeds a sha256 of its canonical payload;
-# readers walk generations downward to the newest manifest that parses
-# and checks. Old manifests are retained ``_MANIFEST_KEEP`` deep —
-# which is also the concurrent-reader grace window: a long-running read
-# planned from gen G stays valid until G falls out of the window AND
-# its dirs are folded+GC'd. This harness serializes reads with folds
-# (foreachBatch); a production deployment sizes the window to its
-# longest query, exactly like Iceberg's expire-snapshots grace.
-#
-# Scope note: "rename-free" is a claim about the VISIBILITY protocol
-# (this module performs no os.rename in manifest mode — asserted in
-# tests). Spark's local parquet committer still renames task files
-# inside a single partition write; on a real object store that job is
-# the platform committer's (S3A magic committer et al.), orthogonal to
-# how committed partitions become visible.
-
-_MANIFEST_DIR = "_manifests"
-#: manifests retained (and thus the concurrent-reader grace depth)
-_MANIFEST_KEEP = 8
-
-
-def manifest_mode() -> bool:
-    return os.environ.get("SPARK_GRAFT_SIDE_MANIFEST", "") == "1"
 
 
 def _mdir(path: str) -> str:
@@ -619,44 +335,28 @@ def _publish_manifest(path: str, gen: int, parts: list[str], **meta) -> None:
             pass
 
 
-def is_manifest_table(path: str) -> bool:
-    return os.path.isdir(_mdir(path))
-
-
 def live_partitions(path: str) -> dict[int, str] | None:
-    """``__b`` → dir name under the table's visibility primitive:
-    manifest-listed when the table has a COMMITTED manifest, None when
-    it does not (the caller falls back to the listing). An empty
-    ``_manifests/`` dir — a crash between its mkdir and the first
-    publish — is deliberately 'no manifest': nothing ever committed,
-    so the listing is still the authoritative view."""
+    """``__b`` → dir name of the table's live partitions: manifest-listed
+    when the table has a COMMITTED manifest, None when it does not (the
+    caller falls back to the listing). An empty ``_manifests/`` dir — a
+    crash between its mkdir and the first publish — is deliberately 'no
+    manifest': nothing ever committed, so the listing is still the
+    authoritative view."""
     _gen, m = _latest_manifest(path)
     if m is None:
         return None
-    parts = m["parts"]
-    out: dict[int, str] = {}
-    for d in parts:
-        try:
-            out[int(d.split("=", 1)[1])] = d
-        except (IndexError, ValueError):
-            continue
-    return out
+    return _by_batch(m["parts"])
 
 
 def register_batch(path: str, batch_id: int) -> None:
-    """Make ``__b=<batch_id>`` visible. No-op for listing-visible
-    tables (and when the env flag is off); set-idempotent on replay."""
-    if not (is_manifest_table(path) or manifest_mode()):
-        return
+    """Make ``__b=<batch_id>`` visible; set-idempotent on replay."""
     gen, m = _latest_manifest(path)
     part = f"__b={batch_id}"
     if m is None:
-        # first publish bootstraps from the listing (covers both a
-        # brand-new table's first batch and a legacy table migrating
-        # into manifest mode mid-stream). The listing already contains
-        # the just-written own partition — that must NOT trip the
-        # replay short-circuit below, or the table never gets its
-        # first manifest at all
+        # first publish bootstraps from the listing. The listing
+        # already contains the just-written own partition — that must
+        # NOT trip the replay short-circuit below, or the table never
+        # gets its first manifest at all
         parts = set(_partitions(path).values())
     else:
         parts = set(m["parts"])
@@ -667,10 +367,9 @@ def register_batch(path: str, batch_id: int) -> None:
 
 
 def read_side(spark: SparkSession, path: str) -> DataFrame:
-    """Read a side-state table under its visibility primitive. The
-    manifest branch pins ``basePath`` so the listed leaf dirs still
-    yield the ``__b`` partition column (the folds' own-batch exclusion
-    filters on it)."""
+    """Read a side-state table's live partitions. The manifest branch
+    pins ``basePath`` so the listed leaf dirs still yield the ``__b``
+    partition column (the folds' own-batch exclusion filters on it)."""
     live = live_partitions(path)
     if live is None:
         return spark.read.parquet(path)
@@ -696,9 +395,9 @@ def live_rows(path: str) -> int:
 
 
 def _recover_manifest(path: str, batch_id: int) -> None:
-    """Crash recovery, manifest mode: re-verify the last published
-    snapshot while its folded sources still exist, then sweep
-    unreferenced dirs per the garbage rule."""
+    """Crash recovery: re-verify the last published snapshot while its
+    folded sources still exist, then sweep unreferenced dirs per the
+    garbage rule."""
     gen, m = _latest_manifest(path)
     if m is None:
         return
@@ -709,10 +408,9 @@ def _recover_manifest(path: str, batch_id: int) -> None:
             os.path.isdir(os.path.join(path, d)) for d in folded
         )
         if sources_intact:
-            # publish→GC window: the fsync-distrust re-check the rename
-            # mode gets from the journal's row count. GC starts only
-            # after this check passes, so a torn snapshot always still
-            # has its full replacement material on disk.
+            # publish→GC window: the fsync-distrust re-check. GC
+            # starts only after this check passes, so a torn snapshot
+            # always still has its full replacement material on disk.
             spath = os.path.join(path, snap)
             try:
                 ok = (
@@ -735,35 +433,46 @@ def _recover_manifest(path: str, batch_id: int) -> None:
             shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
 
-def _compact_manifest(
+def maybe_compact(
     spark: SparkSession,
     path: str,
     batch_id: int,
-    every: int | None,
-    merge: Callable[[DataFrame], DataFrame] | None,
-    invariant: Callable[[DataFrame], DataFrame] | None,
-    target_file_mb: int,
+    every: int | None = None,
+    merge: Callable[[DataFrame], DataFrame] | None = None,
+    invariant: Callable[[DataFrame], DataFrame] | None = None,
+    target_file_mb: int = 128,
 ) -> bool:
-    """The fold under manifest visibility — same tiered-merge policy
-    and checksum gate as the rename protocol, different commit
-    primitive (see the section comment above)."""
-    gen, m = _latest_manifest(path)
-    if m is None:
-        # legacy table entering manifest mode: finish any interrupted
-        # rename-mode swap first (its journal knows things the listing
-        # doesn't), then the recovered listing becomes gen 1
-        if os.path.exists(os.path.join(path, _JOURNAL)):
-            _recover(path)
-        parts = sorted(_partitions(path).values())
-        if not parts:
-            return False
-        gen += 1
-        _publish_manifest(path, gen, parts)
+    """Fold committed ``__b=`` delta partitions of ``path`` into a
+    snapshot partition when ``every`` (default ``DEFAULT_EVERY``) or
+    more are live; no-op (manifest reads and one listing) otherwise.
+    Returns True when a fold ran. Also the table's crash recovery: every
+    call first re-verifies the last fold and sweeps unreferenced dirs.
+
+    ``merge``: optional whole-frame reduction applied to the unioned
+    runs (e.g. qs15's cell-wise count-min sum). Must be idempotent over
+    already-merged data. ``invariant``: 1-row aggregate preserved by
+    ``merge`` (REQUIRED when merge is given — the default row-identity
+    checksum is only valid for pure rewrites); computed over the input
+    union and over the written snapshot files, compared exactly.
+    """
+    if merge is not None and invariant is None:
+        # validated BEFORE the trigger early-return: a mis-wired call
+        # site must fail on its first batch in every harness, not at
+        # batch >= every mid-production (r12 review finding)
+        raise ValueError(
+            "maybe_compact: a custom merge changes row identity — pass "
+            "the merge-preserved invariant explicitly"
+        )
     _recover_manifest(path, batch_id)
     gen, m = _latest_manifest(path)
-    live = dict((live_partitions(path) or {}).items())
-    ev = every if every is not None else _every()
-    # cheap trigger check FIRST (one manifest read per no-op batch)
+    if m is None:
+        # nothing committed yet: the next register_batch bootstraps
+        return False
+    live = _by_batch(m["parts"])
+    ev = every if every is not None else DEFAULT_EVERY
+    # cheap trigger check FIRST: the no-op path (every batch but the
+    # folding ones) must stay manifest reads and a listing, not a
+    # footer walk
     if sum(1 for b in live if 0 <= b < batch_id) < ev:
         return False
     stats = {d: _dir_stats(os.path.join(path, d)) for d in live.values()}
@@ -789,9 +498,15 @@ def _compact_manifest(
         ),
     )
     # direct write to the FINAL name: unreferenced ⇒ invisible, so no
-    # staging dir and no install rename exist in this mode
+    # staging dir and no install rename exist
     out.coalesce(n_files).write.mode("overwrite").parquet(dpath)
 
+    # checksum gate BEFORE any source dir is touched, from the written
+    # files (x55: a fold that drops/duplicates/mangles one row must go
+    # red here, leaving the deltas exactly as they were). The expected
+    # side is computed over the RAW input union — a merge-preserved
+    # invariant must survive the merge, so this also catches a merge
+    # that loses counts, not just a bad write.
     expect = inv(union).collect()[0]
     got = inv(spark.read.parquet(dpath)).collect()[0]
     if tuple(expect) != tuple(got):
@@ -803,6 +518,8 @@ def _compact_manifest(
         )
 
     snap_rows = _dir_stats(dpath)[0]
+    # durability fence: the snapshot's pages are on disk before the
+    # manifest that publishes it
     _fsync_tree(dpath)
     # the commit point: one atomic object creation
     _publish_manifest(
