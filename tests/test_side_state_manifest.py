@@ -1,9 +1,11 @@
 """The side-state manifest visibility protocol (streaming/side_state.py):
 no directory renames, atomic-publish crash semantics at EVERY
 filesystem step, torn manifests, torn published snapshots, replay
-idempotence, and the pure tiered-merge planning bounds (hypothesis, no
-Spark). Content, replay-safety and oracle tests of the folds live in
-test_side_state.py."""
+idempotence, the pure tiered-merge planning bounds (hypothesis, no
+Spark), what each publish and fold commits to the manifests, bootstrap
+of a table that predates its manifest, and qs12/qs17 oracle equivalence
+with a fold trigger of 3. Replay-safety, checksum-gate and every=2
+oracle tests of the folds live in test_side_state.py."""
 
 from __future__ import annotations
 
@@ -236,6 +238,108 @@ def test_unpublished_partition_is_invisible_until_replay_publishes(
     assert _visible(spark, path) == _expected(2)
 
 
+def test_manifest_drive_preserves_content_and_bounds_dirs(spark, tmp_path):
+    """40 batches, every=8, seen through the manifests: every publish
+    (register or fold) commits exactly the next generation, the
+    retained manifest history stays ``_MANIFEST_KEEP`` deep, the newest
+    manifest names only dirs that exist, each fold's manifest records
+    its snapshot's true row count, and the sources it folded are GC'd."""
+    path = str(tmp_path / "state")
+    os.makedirs(path)
+    folds = 0
+    last_gen = 0
+    for b in range(40):
+        folded = S.maybe_compact(spark, path, b, every=8)
+        gen, m = S._latest_manifest(path)
+        assert gen == last_gen + int(folded)
+        if folded:
+            folds += 1
+            assert m["snapshot"] in m["parts"]
+            assert m["rows"] == S._dir_stats(
+                os.path.join(path, m["snapshot"])
+            )[0]
+            assert not set(m["folded"]) & set(m["parts"])
+            for d in m["folded"]:
+                assert not os.path.exists(os.path.join(path, d))
+        _write_delta(spark, path, b, lo=b * 10, n=10)
+        S.register_batch(path, b)
+        last_gen, m = S._latest_manifest(path)
+        assert last_gen == gen + 1 and f"__b={b}" in m["parts"]
+    assert folds >= 3
+    assert _visible(spark, path) == _expected(40)
+    _, m = S._latest_manifest(path)
+    assert all(os.path.isdir(os.path.join(path, d)) for d in m["parts"])
+    kept = [
+        n
+        for n in os.listdir(S._mdir(path))
+        if n.startswith("m-") and n.endswith(".json")
+    ]
+    assert len(kept) == S._MANIFEST_KEEP
+    assert not [n for n in os.listdir(S._mdir(path)) if n.endswith(".tmp")]
+    assert S.live_rows(path) == 400
+
+
+def test_merge_variant_preserves_groupwise_sums_manifest(spark, tmp_path):
+    """qs15's additive count-min shape, checked at the manifest: the
+    fold's commit records the merged snapshot's row count (16 cells,
+    not the 64 input rows) and the four folded sources, which are gone
+    from disk; live row accounting follows the merged snapshot."""
+    path = str(tmp_path / "cells")
+    os.makedirs(path)
+    for b in range(4):
+        spark.createDataFrame(
+            [(d, c, 1) for d in range(2) for c in range(8)],
+            "depth int, cell int, counts long",
+        ).write.mode("overwrite").parquet(os.path.join(path, f"__b={b}"))
+        S.register_batch(path, b)
+    merge = lambda df: df.groupBy("depth", "cell").agg(  # noqa: E731
+        F.sum("counts").alias("counts")
+    )
+    inv = lambda df: df.agg(  # noqa: E731
+        F.sum("counts").cast("bigint").alias("s"),
+        F.countDistinct("depth", "cell").alias("d"),
+    )
+    assert S.maybe_compact(
+        spark, path, batch_id=4, every=2, merge=merge, invariant=inv
+    )
+    _, m = S._latest_manifest(path)
+    assert m["parts"] == [m["snapshot"]]
+    assert m["rows"] == 16
+    assert m["folded"] == [f"__b={b}" for b in range(4)]
+    assert sorted(S._partitions(path).values()) == [m["snapshot"]]
+    assert S.live_rows(path) == 16
+    got = {
+        (r.depth, r.cell): r.counts
+        for r in merge(S.read_side(spark, path)).collect()
+    }
+    assert got == {(d, c): 4 for d in range(2) for c in range(8)}
+
+
+def test_legacy_table_bootstraps_into_manifest_mode(spark, tmp_path):
+    """A listing-visible table that accumulated deltas before it had
+    any manifest: reads serve the listing, the next NEW batch's
+    register_batch publishes gen 1 naming the whole listing plus
+    itself, and folds proceed from there with reads correct
+    throughout."""
+    path = str(tmp_path / "state")
+    os.makedirs(path)
+    for b in range(4):
+        _write_delta(spark, path, b, lo=b * 10, n=10)
+    assert S.live_partitions(path) is None
+    assert _visible(spark, path) == _expected(4)
+    _write_delta(spark, path, 4, lo=40, n=10)
+    S.register_batch(path, 4)
+    gen, m = S._latest_manifest(path)
+    assert gen == 1
+    assert m["parts"] == sorted(f"__b={b}" for b in range(5))
+    assert _visible(spark, path) == _expected(5)
+    assert S.maybe_compact(spark, path, batch_id=5, every=2)
+    live = S.live_partitions(path)
+    assert [b for b in live if b >= 0] == []
+    assert [b for b in live if b < 0]
+    assert _visible(spark, path) == _expected(5)
+
+
 def test_plan_fold_tiered_bounds_property():
     """The pure planning function upholds the module's two asserted
     bounds over random (batch count, every, ratio) — simulated without
@@ -295,3 +399,57 @@ def test_plan_fold_tiered_bounds_property():
         assert n_deltas <= every + 1
 
     run()
+
+
+def _count_folds(monkeypatch) -> list[bool]:
+    """Record every maybe_compact result the ingest callbacks see (they
+    import it from the module at call time)."""
+    results: list[bool] = []
+    real = S.maybe_compact
+
+    def counting(*a, **k):
+        out = real(*a, **k)
+        results.append(out)
+        return out
+
+    monkeypatch.setattr(S, "maybe_compact", counting)
+    return results
+
+
+def test_qs12_manifest_mode_matches_oracle(
+    spark, sf_dir, oracle_con, monkeypatch
+):
+    """End-to-end: qs12 with the fold trigger at 3, so the index folds
+    at a different point of the 4-batch oracle schedule than the
+    every=2 gate in test_side_state.py; a fold must actually commit
+    mid-stream and the result must still match the oracle exactly."""
+    from twitter_kafka_etl_spark.plans import REGISTRY
+    from twitter_kafka_etl_spark.plans.oracle import compare
+
+    monkeypatch.setattr(S, "DEFAULT_EVERY", 3)
+    folds = _count_folds(monkeypatch)
+    out = REGISTRY["qs12_stream_incremental_dedup"].build(spark, sf_dir)
+    ok, msg = compare(
+        out, oracle_con, REGISTRY["qs12_stream_incremental_dedup"].oracle
+    )
+    assert ok, msg
+    assert any(folds), "no fold committed during the stream"
+
+
+def test_qs17_manifest_mode_matches_oracle(
+    spark, sf_dir, oracle_con, monkeypatch
+):
+    """Same gate for the near-dup ingest at fold trigger 3: both side
+    tables (kept corpus + band index) fold mid-stream and the 4-level
+    recursion oracle still matches exactly."""
+    from twitter_kafka_etl_spark.plans import REGISTRY
+    from twitter_kafka_etl_spark.plans.oracle import compare
+
+    monkeypatch.setattr(S, "DEFAULT_EVERY", 3)
+    folds = _count_folds(monkeypatch)
+    out = REGISTRY["qs17_stream_neardup_ingest"].build(spark, sf_dir)
+    ok, msg = compare(
+        out, oracle_con, REGISTRY["qs17_stream_neardup_ingest"].oracle
+    )
+    assert ok, msg
+    assert sum(folds) >= 2, f"only {sum(folds)} fold(s) committed"
